@@ -1531,9 +1531,8 @@ object Dedup {
       .localCheckpoint() // read for the admit filter AND returned
     val admitted = bat.join(
       dec.filter(col("decision") === "new").select("doc_id"), "doc_id")
-    val v =
-      if (admitted.isEmpty) graft.sources.Versioned.latestVersion(dir).getOrElse(0)
-      else graft.sources.Versioned.commitAppend(spark, dir, admitted)
+    // the write counts the admitted rows: an empty admit publishes nothing
+    val (v, _) = graft.sources.Versioned.commitAppendNonEmpty(spark, dir, admitted)
     (v, dec)
   }
 

@@ -2,8 +2,14 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.PlanShim
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-versioned parquet tables: manifest-based commits giving
   * plain parquet the three table-format properties the engine's sinks
@@ -13,38 +19,65 @@ import org.apache.spark.sql.functions.col
   * Layout:
   * {{{
   *   <dir>/data/<commit-uuid>-part-*.parquet   immutable data files
-  *   <dir>/_manifests/v<N>.json                file list per version
+  *   <dir>/_manifests/v<N>.json                schema + file list per version
   * }}}
   *
+  * Manifest: `{"schema":<StructType json>,"files":[{"name":"f",
+  * "stats":{"col":[mn,mx]}}]}` — the table schema of that version and
+  * the files it names (stats only where [[commitAppendStats]] lifted
+  * them). Manifests written before the schema was recorded (v1
+  * `["f", ...]`, v2 `{"files":[...]}`) still read, with the schema
+  * inferred from the files; the next append to such a table stores it.
+  *
   * Protocol: a commit writes its data files into `data/` under a fresh
-  * unique prefix (never touching existing files), then publishes
-  * `v<N>.json` via write-temp + atomic hard-link — createLink FAILS if
-  * the target exists, so concurrent committers race safely: the loser
-  * rebases on the winner's manifest and retries as v<N+1> (a plain
+  * unique prefix (never touching existing files), derives the version's
+  * schema on the driver — the Spark schema in one new file's footer,
+  * merged with the base version's schema by Spark's own parquet
+  * schema-merge rule, so a type conflict fails the commit instead of
+  * every later read — then publishes `v<N>.json` via write-temp +
+  * atomic hard-link — createLink FAILS if the target exists, so
+  * concurrent committers race safely: the loser rebases (files and
+  * schema) on the winner's manifest and retries as v<N+1> (a plain
   * rename would silently replace the winner and lose its commit).
   * Readers list manifests, pick the highest N (or an explicit
-  * version), and read exactly the files it names: a reader never
-  * observes a half-written commit, and a crash before the link leaves
-  * only unreferenced data files (cost: storage until vacuum — never
-  * wrong results). This is the Iceberg/Delta commit protocol reduced
-  * to one manifest level; on an object store the link becomes a
-  * putIfAbsent / conditional-write of the manifest object.
+  * version), and read exactly the files it names with the schema it
+  * records: planning a read touches no data file and runs no Spark job,
+  * a reader never observes a half-written commit, and a crash before
+  * the link leaves only unreferenced data files (cost: storage until
+  * vacuum — never wrong results). This is the Iceberg/Delta commit
+  * protocol reduced to one manifest level; on an object store the link
+  * becomes a putIfAbsent / conditional-write of the manifest object.
   *
-  * At 100 TB: the manifest holds file NAMES only, so commit cost is
-  * O(files touched), reads plan from one small JSON object, and old
-  * snapshots stay readable until [[vacuum]] — which deletes only data
-  * files no retained manifest references.
+  * At 100 TB: the manifest holds file NAMES and the schema only, so
+  * commit cost is O(files touched), reads plan from one small JSON
+  * object, and old snapshots stay readable until [[vacuum]] — which
+  * deletes only data files no retained manifest references.
   */
 object Versioned {
 
+  private type Entry = (String, Map[String, (Long, Long)])
+
+  /** One version: its files (with any footer-lifted stats) and its table
+    * schema, absent only in manifests written before it was recorded. */
+  private final case class Manifest(entries: Seq[Entry], schema: Option[StructType]) {
+    def files: Seq[String] = entries.map(_._1)
+  }
+
   /** Append `df` as a new version; returns the new version number. */
   def commitAppend(spark: SparkSession, dir: String, df: DataFrame): Int =
-    commit(spark, dir, df, keepExisting = true)
+    commit(spark, dir, df, keepExisting = true)._1
+
+  /** Append `df` as a new version unless it has no rows. The write is
+    * the only Spark action: the rows are counted from the staged files'
+    * footers, and an empty write is discarded without publishing.
+    * Returns (version after, rows appended). */
+  def commitAppendNonEmpty(spark: SparkSession, dir: String, df: DataFrame): (Int, Long) =
+    commit(spark, dir, df, keepExisting = true, skipEmpty = true)
 
   /** Replace the table contents as a new version (the old snapshot
     * remains time-travel readable); returns the new version number. */
   def commitOverwrite(spark: SparkSession, dir: String, df: DataFrame): Int =
-    commit(spark, dir, df, keepExisting = false)
+    commit(spark, dir, df, keepExisting = false)._1
 
   /** Append `df` as a new version AND lift per-file min/max for
     * `statCols` (integer-typed columns) out of the parquet FOOTERS into
@@ -60,7 +93,7 @@ object Versioned {
     * collection, and never on the read path. */
   def commitAppendStats(spark: SparkSession, dir: String, df: DataFrame,
       statCols: Seq[String]): Int =
-    commit(spark, dir, df, keepExisting = true, statCols)
+    commit(spark, dir, df, keepExisting = true, statCols)._1
 
   /** Read one version with manifest-level file skipping for the range
     * predicate `lo <= colName <= hi`: files whose recorded [min,max]
@@ -71,10 +104,8 @@ object Versioned {
     * (filtered frame, total files in manifest, files actually read). */
   def readSkipping(spark: SparkSession, dir: String, colName: String,
       lo: Long, hi: Long, version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $dir")))
-    val entries = manifestEntries(dir, v)
-    val kept = entries.filter { case (_, stats) =>
+    val m = manifest(dir, resolve(dir, version))
+    val kept = m.entries.filter { case (_, stats) =>
       stats.get(colName) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None           => true // unknown → must read
@@ -82,12 +113,10 @@ object Versioned {
     }
     val pred = col(colName) >= lo && col(colName) <= hi
     val df =
-      if (kept.nonEmpty)
-        spark.read.parquet(kept.map { case (f, _) => s"$dir/data/$f" }: _*).filter(pred)
+      if (kept.nonEmpty) scan(spark, dir, m.schema, kept.map(_._1)).filter(pred)
       else // every file pruned: keep the schema, return zero rows
-        spark.read.parquet(entries.map { case (f, _) => s"$dir/data/$f" }: _*)
-          .filter(org.apache.spark.sql.functions.lit(false))
-    (df, entries.size, kept.size)
+        scan(spark, dir, m.schema, m.files).filter(org.apache.spark.sql.functions.lit(false))
+    (df, m.entries.size, kept.size)
   }
 
   /** The production ingest step: append `batch` as a new version,
@@ -99,7 +128,8 @@ object Versioned {
     * from the snapshot's parquet and used as a join side — at corpus
     * scale this is the fingerprint column only (pruned scan), shuffled
     * against the (much smaller) batch, or broadcast when the batch is
-    * tiny. Returns (version, rowsAppended). */
+    * tiny. The window + anti-join run once, inside the write (see
+    * [[commitAppendNonEmpty]]). Returns (version, rowsAppended). */
   def commitDedupAppend(spark: SparkSession, dir: String, batch: DataFrame,
       fpCol: String, tieBreak: String): (Int, Long) = {
     import org.apache.spark.sql.expressions.Window
@@ -107,29 +137,26 @@ object Versioned {
     val w = Window.partitionBy(fpCol).orderBy(tieBreak)
     val inBatch = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val fresh = (latestVersion(dir) match {
+    val fresh = latestVersion(dir) match {
       case None => inBatch
       case Some(v) =>
         inBatch.join(read(spark, dir, Some(v)).select(col(fpCol)),
           Seq(fpCol), "left_anti")
-    }).localCheckpoint() // window + anti-join run ONCE for count and write
-    val n = fresh.count()
-    if (n == 0) (latestVersion(dir).getOrElse(0), 0L)
-    else (commit(spark, dir, fresh, keepExisting = true), n)
+    }
+    commitAppendNonEmpty(spark, dir, fresh)
   }
 
-  /** Read the latest version, or an explicit one (time travel).
-    * `mergeSchema` makes SCHEMA EVOLUTION work: an appended commit may
-    * carry new columns, and the merged read null-fills them for files
-    * written before the column existed (a version whose files all
-    * predate the column never shows it — time travel sees the schema
-    * of its era). Identical-schema tables pay only a footer-union at
-    * planning. */
+  /** Read the latest version, or an explicit one (time travel), with the
+    * schema its manifest records — planning runs no Spark job. SCHEMA
+    * EVOLUTION: an appended commit may carry new columns; the recorded
+    * schema is the merge of every append's schema, so the read null-fills
+    * them for files written before the column existed (a version whose
+    * files all predate the column never shows it — time travel sees the
+    * schema of its era). A manifest without a schema falls back to
+    * `mergeSchema` inference, one footer-reading Spark job per read. */
   def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $dir")))
-    val files = manifestFiles(dir, v).map(f => s"$dir/data/$f")
-    spark.read.option("mergeSchema", "true").parquet(files: _*)
+    val m = manifest(dir, resolve(dir, version))
+    scan(spark, dir, m.schema, m.files)
   }
 
   /** All committed version numbers, ascending. */
@@ -150,7 +177,7 @@ object Versioned {
     require(keepLast >= 1, "must retain at least the latest version")
     val vs = versions(dir)
     val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val live = keep.flatMap(manifestFiles(dir, _)).toSet
+    val live = keep.flatMap(manifest(dir, _).files).toSet
     drop.foreach(v => Files.deleteIfExists(Paths.get(dir, "_manifests", s"v$v.json")))
     val dataDir = Paths.get(dir, "data")
     val dead =
@@ -165,60 +192,83 @@ object Versioned {
     * layout on `clusterCol` with fresh footer-lifted stats — the
     * compaction + re-cluster pass a versioned table runs after many
     * small appends degrade its file skipping. Publishes as a new
-    * version (old snapshots stay time-travel readable until vacuum);
-    * returns (new version, files before, files after). */
+    * version with the same schema (old snapshots stay time-travel
+    * readable until vacuum); returns (new version, files before, files
+    * after). */
   def optimize(spark: SparkSession, dir: String, clusterCol: String,
       nFiles: Int): (Int, Int, Int) = {
-    val v = latestVersion(dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $dir"))
-    val before = manifestEntries(dir, v).size
-    val rewritten = read(spark, dir, Some(v))
+    val v = resolve(dir, None)
+    val m = manifest(dir, v)
+    val schema = schemaOf(spark, dir, m)
+    val rewritten = scan(spark, dir, Some(schema), m.files)
       .repartitionByRange(nFiles, col(clusterCol))
-    val nv = commit(spark, dir, rewritten, keepExisting = false, Seq(clusterCol))
-    (nv, before, manifestEntries(dir, nv).size)
+    val (nv, _) = commit(spark, dir, rewritten, keepExisting = false, Seq(clusterCol),
+      fixedSchema = Some(schema))
+    (nv, m.entries.size, manifest(dir, nv).entries.size)
   }
 
   /** Targeted row delete (the right-to-be-forgotten path): remove every
     * row with `lo <= colName <= hi` by rewriting ONLY the files whose
     * manifest [min,max] can intersect the range — all other files carry
-    * over into the new version BY REFERENCE (same names, zero I/O).
-    * Old versions still contain the rows until [[vacuum]] drops their
-    * manifests and reclaims the rewritten-away files; that two-step is
-    * the auditable deletion story every table format ships. Returns
-    * (new version, files rewritten, files shared). On a stats-less v1
-    * manifest every file is conservatively rewritten — correct, just
-    * not pruned. */
+    * over into the new version BY REFERENCE (same names, zero I/O), and
+    * the version keeps the base schema. Old versions still contain the
+    * rows until [[vacuum]] drops their manifests and reclaims the
+    * rewritten-away files; that two-step is the auditable deletion story
+    * every table format ships. Returns (new version, files rewritten,
+    * files shared). On a stats-less v1 manifest every file is
+    * conservatively rewritten — correct, just not pruned. */
   def deleteWhere(spark: SparkSession, dir: String, colName: String,
       lo: Long, hi: Long): (Int, Int, Int) = {
-    val v = latestVersion(dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version under $dir"))
-    val entries = manifestEntries(dir, v)
-    val (touched, shared) = entries.partition { case (_, stats) =>
+    val v = resolve(dir, None)
+    val m = manifest(dir, v)
+    val (touched, shared) = m.entries.partition { case (_, stats) =>
       stats.get(colName) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None           => true // unknown → may contain the range
       }
     }
     if (touched.isEmpty) return (v, 0, shared.size)
-    val survivors = spark.read
-      .parquet(touched.map { case (f, _) => s"$dir/data/$f" }: _*)
+    val schema = schemaOf(spark, dir, m)
+    val survivors = scan(spark, dir, Some(schema), touched.map(_._1))
       .filter(!(col(colName) >= lo && col(colName) <= hi))
     val keepStats = touched.headOption
       .map(_._2.keys.toSeq.sorted).getOrElse(Seq.empty)
-    val nv = commitReplacing(spark, dir, survivors, shared, keepStats)
+    val (nv, _) = commit(spark, dir, survivors, keepExisting = false, keepStats,
+      extraEntries = shared, fixedSchema = Some(schema))
     (nv, touched.size, shared.size)
   }
 
-  /** Commit `df` as a new version that also keeps `sharedEntries` by
-    * reference (the rewrite-some-files half of deleteWhere). */
-  private def commitReplacing(spark: SparkSession, dir: String, df: DataFrame,
-      sharedEntries: Seq[(String, Map[String, (Long, Long)])],
-      statCols: Seq[String]): Int =
-    commit(spark, dir, df, keepExisting = false, statCols, sharedEntries)
+  private def resolve(dir: String, version: Option[Int]): Int =
+    version.getOrElse(latestVersion(dir).getOrElse(
+      throw new IllegalArgumentException(s"no committed version under $dir")))
 
+  /** The scan of `files` under the recorded schema, or — for a manifest
+    * that predates it — under the schema `mergeSchema` infers. */
+  private def scan(spark: SparkSession, dir: String, schema: Option[StructType],
+      files: Seq[String]): DataFrame = {
+    val paths = files.map(f => s"$dir/data/$f")
+    schema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None    => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
+  /** A version's table schema: recorded, or inferred once (a Spark job)
+    * for a manifest written before schemas were recorded. */
+  private def schemaOf(spark: SparkSession, dir: String, m: Manifest): StructType =
+    m.schema.getOrElse(scan(spark, dir, None, m.files).schema)
+
+  /** Write `df`, move its files into `data/` and publish them as the next
+    * version: appended to the latest version's files when
+    * `keepExisting`, else alongside `extraEntries` only. The version's
+    * schema is `fixedSchema` when given (rewrites of one version), the
+    * written schema merged into the base version's on append, else the
+    * written schema alone (overwrite). With `skipEmpty`, a write of zero
+    * rows publishes nothing. Returns (version after, rows written). */
   private def commit(spark: SparkSession, dir: String, df: DataFrame,
       keepExisting: Boolean, statCols: Seq[String] = Seq.empty,
-      extraEntries: Seq[(String, Map[String, (Long, Long)])] = Seq.empty): Int = {
+      extraEntries: Seq[Entry] = Seq.empty, fixedSchema: Option[StructType] = None,
+      skipEmpty: Boolean = false): (Int, Long) = {
     val dataDir = Paths.get(dir, "data")
     Files.createDirectories(dataDir)
     Files.createDirectories(Paths.get(dir, "_manifests"))
@@ -227,138 +277,154 @@ object Versioned {
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val staging = Paths.get(dir, s"_staging-$commitId")
     df.write.parquet(staging.toString)
-    val newEntries = listDir(staging)
+    val staged = listDir(staging)
       .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val stats = if (statCols.isEmpty) Map.empty[String, (Long, Long)]
-          else footerStats(spark, p, statCols)
-        val name = s"$commitId-${p.getFileName.toString}"
-        Files.move(p, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-        name -> stats
-      }.sortBy(_._1)
+      .sortBy(_.getFileName.toString)
+      .map(p => p -> footer(spark, p))
+    val rows = staged.map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+    if (skipEmpty && rows == 0) {
+      deleteRecursively(staging)
+      return (latestVersion(dir).getOrElse(0), 0L)
+    }
+    val written = PlanShim.asNullable(sparkSchema(staged.head._2))
+    val newEntries = staged.map { case (p, meta) =>
+      val name = s"$commitId-${p.getFileName.toString}"
+      Files.move(p, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      name -> footerStats(meta, statCols)
+    }
     deleteRecursively(staging)
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     // publish with a compare-and-swap: createLink is atomic and FAILS
     // if v<N>.json already exists (rename would silently replace it —
     // a concurrent committer's manifest would be lost). On collision,
-    // re-read the latest version and retry against the new base.
-    var attempt = 0
-    while (true) {
-      val prev = if (keepExisting) latestVersion(dir).map(manifestEntries(dir, _))
-        .getOrElse(Seq.empty) else Seq.empty
-      val v = latestVersion(dir).getOrElse(0) + 1
-      val manifest = renderManifest(prev ++ extraEntries ++ newEntries)
+    // re-read the latest version and retry against the new base: its
+    // files AND its schema.
+    @annotation.tailrec
+    def publish(attempt: Int): Int = {
+      val latest = latestVersion(dir)
+      val base = if (keepExisting) latest.map(manifest(dir, _)) else None
+      val schema = fixedSchema.getOrElse(base.filter(_.entries.nonEmpty) match {
+        case None => written
+        case Some(b) =>
+          try PlanShim.mergeSchema(schemaOf(spark, dir, b), written, caseSensitive)
+          catch { case e: Exception =>
+            newEntries.foreach(n => Files.deleteIfExists(dataDir.resolve(n._1)))
+            throw new IllegalArgumentException(
+              s"append to $dir conflicts with the schema of v${latest.get}: ${e.getMessage}", e)
+          }
+      })
+      val v = latest.getOrElse(0) + 1
+      val entries = base.map(_.entries).getOrElse(Seq.empty) ++ extraEntries ++ newEntries
       val tmp = Paths.get(dir, "_manifests", s".v$v-$commitId.json.tmp")
-      Files.writeString(tmp, manifest)
-      try {
-        Files.createLink(Paths.get(dir, "_manifests", s"v$v.json"), tmp)
-        Files.delete(tmp)
-        return v
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp) // lost the race: rebase on the winner and retry
-          attempt += 1
-          require(attempt < 100, s"commit contention on $dir did not resolve")
+      Files.writeString(tmp, renderManifest(Manifest(entries, Some(schema))))
+      val won =
+        try { Files.createLink(Paths.get(dir, "_manifests", s"v$v.json"), tmp); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      Files.delete(tmp)
+      if (won) v
+      else { // lost the race: rebase on the winner and retry
+        require(attempt + 1 < 100, s"commit contention on $dir did not resolve")
+        publish(attempt + 1)
       }
     }
-    -1 // unreachable
+    (publish(0), rows)
   }
 
-  /** Per-file min/max for integer-typed `cols`, aggregated across the
-    * file's row-group footers (driver-side metadata read, no data pages
-    * touched). A column is recorded only when EVERY row group carries
-    * usable stats — a single stats-less chunk makes the file's true
-    * range unknown, and recording a partial range would prune wrongly. */
-  private def footerStats(spark: SparkSession, file: Path,
-      cols: Seq[String]): Map[String, (Long, Long)] = {
-    import scala.jdk.CollectionConverters._
+  /** The footer of one data file (driver-side metadata read, no data
+    * pages touched). */
+  private def footer(spark: SparkSession, file: Path): ParquetMetadata = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val in = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri),
       spark.sessionState.newHadoopConf())
     val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      cols.flatMap { c =>
-        val chunks = blocks.flatMap(_.getColumns.asScala
-          .filter(_.getPath.toDotString == c))
-        val ok = chunks.nonEmpty && chunks.forall { ch =>
-          val t = ch.getPrimitiveType.getPrimitiveTypeName
-          (t == PrimitiveTypeName.INT64 || t == PrimitiveTypeName.INT32) &&
-            ch.getStatistics != null && !ch.getStatistics.isEmpty &&
-            ch.getStatistics.hasNonNullValue
-        }
-        if (!ok) None
-        else {
-          val mins = chunks.map(_.getStatistics.genericGetMin.asInstanceOf[Number].longValue)
-          val maxs = chunks.map(_.getStatistics.genericGetMax.asInstanceOf[Number].longValue)
-          Some(c -> (mins.min, maxs.max))
-        }
-      }.toMap
-    } finally reader.close()
+    try reader.getFooter finally reader.close()
   }
 
-  /** v1 manifest: `["file", ...]` (no stats anywhere). v2 (any entry
-    * carries stats): `{"files":[{"name":"f","stats":{"col":[mn,mx]}}]}`.
-    * Readers accept both; stats survive append rebases verbatim. */
-  private def renderManifest(entries: Seq[(String, Map[String, (Long, Long)])]): String =
-    if (entries.forall(_._2.isEmpty))
-      entries.map(e => "\"" + e._1 + "\"").mkString("[", ",", "]")
-    else {
-      val items = entries.map { case (f, stats) =>
-        val st = stats.toSeq.sortBy(_._1)
-          .map { case (c, (mn, mx)) => s""""$c":[$mn,$mx]""" }
-          .mkString("{", ",", "}")
-        s"""{"name":"$f","stats":$st}"""
+  /** The Spark schema a Spark writer records in every parquet footer —
+    * the schema `mergeSchema` inference reads back per file. */
+  private def sparkSchema(meta: ParquetMetadata): StructType = {
+    val s = meta.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    require(s != null, "parquet footer carries no Spark schema")
+    DataType.fromJson(s).asInstanceOf[StructType]
+  }
+
+  /** Per-file min/max for integer-typed `cols`, aggregated across the
+    * file's row-group footers. A column is recorded only when EVERY row
+    * group carries usable stats — a single stats-less chunk makes the
+    * file's true range unknown, and recording a partial range would
+    * prune wrongly. */
+  private def footerStats(meta: ParquetMetadata,
+      cols: Seq[String]): Map[String, (Long, Long)] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val blocks = meta.getBlocks.asScala.toSeq
+    cols.flatMap { c =>
+      val chunks = blocks.flatMap(_.getColumns.asScala
+        .filter(_.getPath.toDotString == c))
+      val ok = chunks.nonEmpty && chunks.forall { ch =>
+        val t = ch.getPrimitiveType.getPrimitiveTypeName
+        (t == PrimitiveTypeName.INT64 || t == PrimitiveTypeName.INT32) &&
+          ch.getStatistics != null && !ch.getStatistics.isEmpty &&
+          ch.getStatistics.hasNonNullValue
       }
-      items.mkString("""{"files":[""", ",", "]}")
+      if (!ok) None
+      else {
+        val mins = chunks.map(_.getStatistics.genericGetMin.asInstanceOf[Number].longValue)
+        val maxs = chunks.map(_.getStatistics.genericGetMax.asInstanceOf[Number].longValue)
+        Some(c -> (mins.min, maxs.max))
+      }
+    }.toMap
+  }
+
+  private val json = new ObjectMapper()
+
+  /** Manifests render as `{"schema":{...},"files":[{"name":"f"},
+    * {"name":"g","stats":{"col":[mn,mx]}}]}`. Stats survive append
+    * rebases verbatim. */
+  private def renderManifest(m: Manifest): String = {
+    val root = json.createObjectNode()
+    m.schema.foreach(s => root.set[JsonNode]("schema", json.readTree(s.json)))
+    val files = root.putArray("files")
+    m.entries.foreach { case (f, stats) =>
+      val e = files.addObject().put("name", f)
+      if (stats.nonEmpty) {
+        val st = e.putObject("stats")
+        stats.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) => st.putArray(c).add(mn).add(mx) }
+      }
     }
+    json.writeValueAsString(root)
+  }
 
-  private def manifestFiles(dir: String, v: Int): Seq[String] =
-    manifestEntries(dir, v).map(_._1)
-
-  private def manifestEntries(dir: String, v: Int): Seq[(String, Map[String, (Long, Long)])] = {
+  /** Reads every manifest shape this layer has written: v1 `["f", ...]`
+    * (no stats, no schema), v2 `{"files":[{"name":"f","stats":{...}}]}`
+    * (no schema) and the current `{"schema":{...},"files":[...]}`. */
+  private def manifest(dir: String, v: Int): Manifest = {
     val m = Paths.get(dir, "_manifests", s"v$v.json")
     require(Files.exists(m), s"version $v does not exist under $dir")
-    val s = Files.readString(m).trim
-    if (s.startsWith("[")) { // v1: bare file list
-      require(s.endsWith("]"), s"malformed manifest $m")
-      val body = s.substring(1, s.length - 1).trim
-      if (body.isEmpty) Seq.empty
-      else body.split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"") -> Map.empty[String, (Long, Long)])
-    } else { // v2: {"files":[{"name":...,"stats":{col:[mn,mx]}}]}
-      // File names are commit-uuid + part-file names and column names are
-      // identifiers — no quotes/braces/commas inside values — so the
-      // hand-rolled split below is unambiguous for everything this layer
-      // writes (renderManifest is the only producer).
-      require(s.startsWith("""{"files":[""") && s.endsWith("]}"),
-        s"malformed manifest $m")
-      val body = s.stripPrefix("""{"files":[""").stripSuffix("]}").trim
-      if (body.isEmpty) Seq.empty
-      else body.split("""(?<=\}),(?=\{)""").toSeq.map { item =>
-        val nameRe = """"name":"([^"]+)"""".r
-        val name = nameRe.findFirstMatchIn(item)
-          .getOrElse(sys.error(s"manifest entry without name: $item")).group(1)
-        val statsBody = item.substring(item.indexOf(""""stats":{""") + 9)
-          .stripSuffix("}").stripSuffix("}")
-        val colRe = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-        val stats = colRe.findAllMatchIn(statsBody)
-          .map(mm => mm.group(1) -> (mm.group(2).toLong, mm.group(3).toLong)).toMap
-        name -> stats
+    val root = json.readTree(Files.readString(m))
+    val files = if (root.isArray) root else root.path("files")
+    require(files.isArray, s"malformed manifest $m")
+    val entries = files.elements().asScala.map { e =>
+      if (e.isTextual) e.asText -> Map.empty[String, (Long, Long)]
+      else {
+        require(e.hasNonNull("name"), s"manifest entry without name in $m: $e")
+        e.get("name").asText -> e.path("stats").properties().asScala
+          .map(s => s.getKey -> (s.getValue.get(0).asLong, s.getValue.get(1).asLong)).toMap
       }
-    }
+    }.toSeq
+    val schema = Option(root.get("schema")).filter(_.isObject)
+      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+    Manifest(entries, schema)
   }
 
   private def listDir(p: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
   }
 
   private[graft] def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
     if (Files.exists(p)) {
       val s = Files.walk(p)
       val all = try s.iterator().asScala.toSeq finally s.close()

@@ -12,6 +12,40 @@ class SourcesSpec extends SparkSpec {
 
   private def docs = Tables.documents(spark, sf)
 
+  /** `body`'s result and the ids of the Spark jobs it submits on this
+    * thread. A fence job run after it orders the listener bus: once the
+    * status store shows the fence, every job submitted before it is in
+    * the store too. */
+  private def jobsDuring[T](body: => T): (T, Seq[Int]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "counted", interruptOnCancel = false)
+    val result = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-fence", "fence", interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    var spins = 0
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-fence").isEmpty && spins < 100) {
+      Thread.sleep(50); spins += 1
+    }
+    (result, sc.statusTracker.getJobIdsForGroup(group).toSeq)
+  }
+
+  /** Every version of the table at `dir` records its schema, plans a
+    * read without a Spark job, and reads with exactly the schema that
+    * `mergeSchema` inference over the same files returns. */
+  private def assertStoredSchemaParity(dir: String): Unit = {
+    import graft.sources.Versioned
+    Versioned.versions(dir).foreach { v =>
+      val manifest = Files.readString(java.nio.file.Paths.get(dir, "_manifests", s"v$v.json"))
+      assert(manifest.contains("\"schema\""), s"v$v records no schema: $manifest")
+      val (stored, jobs) = jobsDuring(Versioned.read(spark, dir, Some(v)))
+      assert(jobs.isEmpty, s"v$v: planning the read ran Spark jobs $jobs")
+      val inferred = spark.read.option("mergeSchema", "true").parquet(stored.inputFiles: _*)
+      assert(stored.schema == inferred.schema,
+        s"v$v: stored ${stored.schema.treeString} != inferred ${inferred.schema.treeString}")
+    }
+  }
+
   test("ORC round-trip is value-identical to the parquet source") {
     val dir = Files.createTempDirectory("graft-orc").toString
     docs.write.mode("overwrite").orc(dir)
@@ -369,6 +403,7 @@ class SourcesSpec extends SparkSpec {
     assert(merged.filter(col("quality") === 7L).count() == 5)
     // time travel to v1 sees the schema of its era — no phantom column
     assert(!Versioned.read(spark, dir, Some(1)).columns.contains("quality"))
+    assertStoredSchemaParity(dir)
   }
 
   test("versioned OPTIMIZE: fragmented appends compact, skipping returns, history intact") {
@@ -394,6 +429,7 @@ class SourcesSpec extends SparkSpec {
       s"optimize must improve selectivity: $k1/$t1 vs $k0/$t0")
     assert(pruned.count() == docs.filter(col("doc_id").between(10, 19)).count())
     assert(Versioned.read(spark, dir, Some(nv - 1)).count() <= total)
+    assertStoredSchemaParity(dir)
   }
 
   test("targeted delete rewrites only overlapping files; history survives until vacuum") {
@@ -422,6 +458,7 @@ class SourcesSpec extends SparkSpec {
     // a no-op delete (range outside every file) shares everything
     val (nv2, r2, s2) = Versioned.deleteWhere(spark, dir, "doc_id", 5000000L, 6000000L)
     assert(nv2 == nv && r2 == 0 && s2 > 0, "out-of-range delete must not commit")
+    assertStoredSchemaParity(dir)
   }
 
   test("incremental dedup ingest: new fingerprints append, replays are no-ops") {
@@ -444,5 +481,82 @@ class SourcesSpec extends SparkSpec {
     val (v3, replayed) = Versioned.commitDedupAppend(spark, dir, batch, "fp", "doc_id")
     assert(v3 == 2 && replayed == 0L)
     assert(Versioned.versions(dir) == Seq(1, 2))
+  }
+
+  test("dedup appends leave no persisted RDD behind") {
+    import graft.sources.Versioned
+    val dir = Files.createTempDirectory("graft-dedup-leak").toString
+    val batch = docs.filter(col("doc_id") < 20).withColumn("fp", md5(col("text")))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Versioned.commitDedupAppend(spark, dir, batch, "fp", "doc_id")
+    Versioned.commitDedupAppend(spark, dir, batch, "fp", "doc_id") // replay: admits nothing
+    Versioned.commitDedupAppend(spark, dir,
+      docs.filter(col("doc_id") >= 20 && col("doc_id") < 30).withColumn("fp", md5(col("text"))),
+      "fp", "doc_id")
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "commitDedupAppend must not leave RDDs persisted for the session")
+    assert(Versioned.versions(dir) == Seq(1, 2))
+  }
+
+  test("an append whose column types conflict with the table fails before publishing") {
+    import graft.sources.Versioned
+    val dir = Files.createTempDirectory("graft-poison").toString
+    val base = docs.filter(col("doc_id") < 20).select(col("doc_id"), col("lang"))
+    Versioned.commitAppend(spark, dir, base)
+    val dataFiles = Files.list(java.nio.file.Paths.get(dir, "data")).count()
+    val poisoned = base.select(col("doc_id").cast("string").as("doc_id"), col("lang"))
+    intercept[IllegalArgumentException] {
+      Versioned.commitAppend(spark, dir, poisoned)
+    }
+    assert(Versioned.versions(dir) == Seq(1), "a conflicting append must not publish")
+    assert(Files.list(java.nio.file.Paths.get(dir, "data")).count() == dataFiles,
+      "a failed commit must not leave its data files behind")
+    assert(Versioned.read(spark, dir).count() == 20)
+    // the table still takes a compatible append afterwards
+    assert(Versioned.commitAppend(spark, dir, base) == 2)
+    assert(Versioned.read(spark, dir).count() == 40)
+  }
+
+  test("manifests written before schemas were recorded read, time-travel and take appends") {
+    import graft.sources.Versioned
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft-legacy-manifest").toString
+    val staging = Files.createTempDirectory("graft-legacy-staging").toString + "/t"
+    docs.select("doc_id", "lang").repartitionByRange(2, col("doc_id")).write.parquet(staging)
+    val files = Files.list(Paths.get(staging)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString).toSeq
+    Files.createDirectories(Paths.get(dir, "data"))
+    Files.createDirectories(Paths.get(dir, "_manifests"))
+    files.foreach(f => Files.copy(f, Paths.get(dir, "data", f.getFileName.toString)))
+    val names = files.map(_.getFileName.toString)
+    def rangeOf(f: java.nio.file.Path) = {
+      val ids = spark.read.parquet(f.toString).agg(min("doc_id"), max("doc_id")).head()
+      (ids.getLong(0), ids.getLong(1))
+    }
+    // v1: a bare file list holding the first file; v2: stats for both
+    Files.writeString(Paths.get(dir, "_manifests", "v1.json"), s"""["${names.head}"]""")
+    Files.writeString(Paths.get(dir, "_manifests", "v2.json"), files.map { f =>
+      val (mn, mx) = rangeOf(f)
+      s"""{"name":"${f.getFileName}","stats":{"doc_id":[$mn,$mx]}}"""
+    }.mkString("""{"files":[""", ",", "]}"))
+    val total = docs.count()
+    val firstFile = spark.read.parquet(files.head.toString).count()
+    assert(Versioned.read(spark, dir).count() == total)
+    assert(Versioned.read(spark, dir, Some(1)).count() == firstFile)
+    val (pruned, t, k) = Versioned.readSkipping(spark, dir, "doc_id", 0L, 0L)
+    assert(t == 2 && k == 1 && pruned.count() == 1, s"v2 stats must prune: kept $k of $t")
+    // the first append infers the base schema once and records it
+    assert(Versioned.commitAppend(spark, dir,
+      docs.filter(col("doc_id") < 5).select(col("doc_id"), col("lang"), lit(1L).as("quality"))) == 3)
+    assert(Versioned.read(spark, dir).count() == total + 5)
+    assert(Versioned.read(spark, dir).columns.toSeq == Seq("doc_id", "lang", "quality"))
+    val (_, t3, k3) = Versioned.readSkipping(spark, dir, "doc_id", 0L, 0L)
+    assert(t3 == 3 && k3 == 2, "v2's stats must survive the rebase")
+    assert(Versioned.read(spark, dir, Some(1)).count() == firstFile)
+    val v3 = Files.readString(Paths.get(dir, "_manifests", "v3.json"))
+    assert(v3.contains("\"schema\""), s"the append must record the schema: $v3")
+    val (read3, jobs) = jobsDuring(Versioned.read(spark, dir))
+    assert(jobs.isEmpty, s"planning the read ran Spark jobs $jobs")
+    assert(read3.schema == spark.read.option("mergeSchema", "true").parquet(read3.inputFiles: _*).schema)
   }
 }
